@@ -168,17 +168,23 @@ SCALE_PROBES = {
 def _cpu_scaling(s, d):
     from pyspark.sql import functions as F
 
+    from blackroad_data_pipeline_spark.llmops.dedup import (
+        minhash_signature,
+        shingles_col,
+    )
+
     # first 256 chars / 8 hash families: enough interpreted per-row
     # work to be compute-bound at any core count, small enough to stay
     # a sub-second canary (the full-width JVM signature measured 21 s)
     docs = _docs(s, d).select(
         "doc_id", F.substring("text", 1, 256).alias("text"))
-    # width = session parallelism DIRECTLY (not pin_width): the canary
-    # exists to measure core scaling, so its width must always track
-    # the core count regardless of the pin knob
+    # width = session parallelism: the canary exists to measure core
+    # scaling, so its width must always track the core count
     wide = docs.repartition(s.sparkContext.defaultParallelism, "doc_id")
-    sig = op("minhash", wide, {"field": "text", "shingle_size": 5,
-                               "num_hashes": 8, "sig_impl": "jvm"})
+    # zero-shingle docs get a NULL signature, as in the minhash operator
+    sh = shingles_col(F.col("text"), 5)
+    sig = wide.withColumn("minhash_sig",
+                          F.when(F.size(sh) > 0, minhash_signature(sh, 8)))
     # modulo before summing: raw minhash values span int64 and a plain
     # SUM overflows under ANSI
     h = F.element_at("minhash_sig", 1)

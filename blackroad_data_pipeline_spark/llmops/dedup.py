@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.parallel import fan_out, lit_frame, pin_width
+from ..operators.parallel import fan_out, lit_frame
 from ..operators.registry import register
 from .text import kgrams_col, tokens_col
 
@@ -75,7 +75,8 @@ def minhash_signature(shingle_col: Column, num_hashes: int) -> Column:
     h_i(s) = xxhash64(s, i) (seeding via an appended literal —
     deterministic everywhere). O(num_hashes * n_shingles) hash calls
     in interpreted higher-order functions — correct but slow for large
-    signatures; the Arrow kernel below is the hot-path default.
+    signatures, so the operators sign with the Arrow kernels below;
+    bench.py's cpu_scaling canary uses this as CPU-bound JVM work.
 
     The seed must be captured via a closure over a ONE-parameter
     lambda: a ``lambda s, i=i:`` default-arg would make pyspark treat
@@ -228,26 +229,13 @@ def shingle_explode(df: DataFrame, id_field: str, field: str, k: int) -> DataFra
     return fan_out(df.select(id_field, field)).mapInPandas(explode, schema)
 
 
-def _sig_col(config: Mapping, shingles: Column, num_hashes: int) -> Column:
-    """Signature column per the configured implementation: the Arrow
-    kernel (default — one digest per batch-unique shingle) or the
-    all-JVM xxhash expression path (``sig_impl: "jvm"``). Both are
-    min-wise independent families; banding math is identical."""
-    if config.get("sig_impl", "arrow") == "jvm":
-        # NULL signature for zero-shingle (NULL-text) docs, matching
-        # the Arrow kernel (round-11 NULL-text contract)
-        return F.when(F.size(shingles) > 0,
-                      minhash_signature(shingles, num_hashes))
-    return minhash_kernel(num_hashes)(shingles)
-
-
 @register("minhash")
 def op_minhash(df: DataFrame, config: Mapping, views) -> DataFrame:
     field = config.get("field", "text")
     k = int(config.get("shingle_size", 3))
     num_hashes = int(config.get("num_hashes", 32))
     sh = shingles_col(F.col(field), k)
-    return df.withColumn("minhash_sig", _sig_col(config, sh, num_hashes))
+    return df.withColumn("minhash_sig", minhash_kernel(num_hashes)(sh))
 
 
 # --------------------------------------------------------------------------
@@ -290,15 +278,11 @@ def op_near_dup_minhash(df: DataFrame, config: Mapping, views) -> DataFrame:
     # unsplittable input file would serialize both onto one task
     base = fan_out(
         df.select(F.col(id_field).alias("__id"), F.col(field).alias("__t")))
-    if config.get("sig_impl", "arrow") == "jvm":
-        sigs = base.withColumn(
-            "__sig", minhash_signature(shingles_col(F.col("__t"), k), num_hashes))
-    else:
-        # text -> signature in one Arrow kernel: only the text crosses
-        # to Python, shingling runs batch-deduped (the JVM higher-order
-        # shingling was the measured bottleneck, not the hashing)
-        sigs = base.withColumn(
-            "__sig", minhash_text_kernel(k, num_hashes)(F.col("__t")))
+    # text -> signature in one Arrow kernel: only the text crosses
+    # to Python, shingling runs batch-deduped (the JVM higher-order
+    # shingling was the measured bottleneck, not the hashing)
+    sigs = base.withColumn(
+        "__sig", minhash_text_kernel(k, num_hashes)(F.col("__t")))
 
     band_entries = _band_entries_col(bands, rows)
     # band join on ids ONLY — shuffling signatures or text through the
@@ -1266,13 +1250,8 @@ def op_minhash_bands(df: DataFrame, config: Mapping, views) -> DataFrame:
     bands = int(config.get("bands", 8))
     rows = int(config.get("rows_per_band", 4))
     base = fan_out(df.select(F.col(id_field), F.col(field).alias("__t")))
-    if config.get("sig_impl", "arrow") == "jvm":
-        sigs = base.withColumn(
-            "__sig", minhash_signature(shingles_col(F.col("__t"), k),
-                                       bands * rows))
-    else:
-        sigs = base.withColumn(
-            "__sig", minhash_text_kernel(k, bands * rows)(F.col("__t")))
+    sigs = base.withColumn(
+        "__sig", minhash_text_kernel(k, bands * rows)(F.col("__t")))
     return (sigs.select(id_field,
                         F.explode(_band_entries_col(bands, rows)).alias("b"))
             .select(id_field, F.col("b.band_idx").alias("band_idx"),
@@ -1550,21 +1529,18 @@ def op_triangle_count(df: DataFrame, config: Mapping, views) -> DataFrame:
     # 5.26 s -> 3.45 s at sf0.1 with the pin; identical count). Skew
     # is already bounded by the orientation theorem, which is what
     # AQE skew-splitting would otherwise buy on these joins.
-    # Round 14: width routed through the shared, knob-tunable helper
-    # (SPARK_GRAFT_WIDTH_PIN; ADVICE r13).
-    width = pin_width(df.sparkSession)
-    _rep = (lambda fr, key: fr.repartition(width, key)) if width \
-        else (lambda fr, key: fr)
-    adj = (_rep(oriented, "u").groupBy("u").agg(
+    width = df.sparkSession.sparkContext.defaultParallelism
+    adj = (oriented.repartition(width, "u").groupBy("u").agg(
         F.sort_array(F.collect_list("v")).alias("__nbrs")))
     per_edge = (
-        _rep(oriented.select("u", "v"), "u")
+        oriented.select("u", "v").repartition(width, "u")
         .join(adj.select(F.col("u").alias("u"),
                          F.col("__nbrs").alias("__na")), "u"))
     per_edge = (
-        _rep(per_edge, "v")
-        .join(_rep(adj.select(F.col("u").alias("v"),
-                              F.col("__nbrs").alias("__nb")), "v"), "v")
+        per_edge.repartition(width, "v")
+        .join(adj.select(F.col("u").alias("v"),
+                         F.col("__nbrs").alias("__nb"))
+              .repartition(width, "v"), "v")
         .select(F.size(F.array_intersect("__na", "__nb")).alias("__t")))
     return per_edge.agg(
         F.coalesce(F.sum("__t"), F.lit(0)).cast("long")

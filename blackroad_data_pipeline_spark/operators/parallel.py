@@ -36,13 +36,8 @@ ingest chains whose band/signature subtrees re-execute per day
 DEGRADE with width because every extra task multiplies per-stage
 scheduling/Arrow overhead across dozens of stages.
 
-``SPARK_GRAFT_KERNEL_FANOUT`` pins the TARGET width for deployments
-whose starved inputs deserve more (``0`` disables fan-out entirely).
-Note the ``n >= target`` no-op still applies: the knob can only
-WIDEN a narrow input up to its value, never narrow an already-wide
-one (narrowing would add an exchange to at-scale plans). A malformed
-value is ignored with a one-time warning — it must never break the
-operators that widen.
+The width has no setting: ``_target_width`` derives it from the
+session and the input alone.
 
 Only partition-INVARIANT kernels may be fanned out (every call site
 is a per-row/per-doc deterministic function); order-sensitive kernels
@@ -52,14 +47,13 @@ is a per-row/per-doc deterministic function); order-sensitive kernels
 from __future__ import annotations
 
 import logging
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 log = logging.getLogger(__name__)
 
 # see module docstring: measured plateau/degradation knee at sf0.1
-_DEFAULT_MAX_WIDTH = 8
+_KNEE_WIDTH = 8
 # guide §6: 128 MB-1 GB per task for large scans; the floor above
 # dominates until a starved input exceeds 1 GB
 _TARGET_PARTITION_BYTES = 128 * 1024 * 1024
@@ -74,25 +68,6 @@ def _warn_once(key: str, msg: str, *args) -> None:
     if key not in _warned:
         _warned.add(key)
         log.warning(msg, *args)
-
-
-def _knob_width() -> int | None:
-    """SPARK_GRAFT_KERNEL_FANOUT parsed defensively: ``None`` when
-    unset or malformed (ADVICE r13 — a bad value must not raise inside
-    every kernel operator), else the non-negative int."""
-    raw = os.environ.get("SPARK_GRAFT_KERNEL_FANOUT", "")
-    if not raw:
-        return None
-    try:
-        v = int(raw.strip())
-        if v < 0:
-            raise ValueError(raw)
-        return v
-    except ValueError:
-        _warn_once(f"knob:{raw}",
-                   "ignoring malformed SPARK_GRAFT_KERNEL_FANOUT=%r "
-                   "(expected an int >= 0); using the default width", raw)
-        return None
 
 
 def _leaf_scan_bytes(df: DataFrame) -> int:
@@ -115,25 +90,24 @@ def _leaf_scan_bytes(df: DataFrame) -> int:
         return 0
 
 
-def fan_out(df: DataFrame, max_width: int | None = None) -> DataFrame:
+def _target_width(df: DataFrame) -> int:
+    """The size-aware kernel width for ``df`` (module docstring):
+    session parallelism, floored at the measured knee and raised by
+    the leaf scan bytes at one task per 128 MB."""
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    by_size = _leaf_scan_bytes(df) // _TARGET_PARTITION_BYTES
+    return min(parallelism, max(_KNEE_WIDTH, by_size))
+
+
+def fan_out(df: DataFrame) -> DataFrame:
     """Repartition ``df`` round-robin to the size-aware target width
     iff it currently has fewer partitions — a no-op on any input that
     already carries enough tasks. Streaming inputs are returned
     unchanged (their micro-batch partitioning is owned by the
     source)."""
-    knob = _knob_width()
-    if knob == 0:
-        return df
     if df.isStreaming:
         return df
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if knob:
-        target = knob
-    else:
-        by_size = _leaf_scan_bytes(df) // _TARGET_PARTITION_BYTES
-        target = min(parallelism, max(_DEFAULT_MAX_WIDTH, by_size))
-    if max_width:
-        target = min(target, max_width)
+    target = _target_width(df)
     if target <= 1:
         return df
     try:
@@ -208,6 +182,10 @@ def arrow_local_frame(spark: SparkSession, rows: list, schema):
             if isinstance(r, dict):
                 pylist.append(r)
             elif isinstance(r, (tuple, list)):
+                # a row of the wrong arity would be silently NULL-filled
+                # or truncated by zip; the RDD path raises on it
+                if len(r) != len(names):
+                    return None
                 # Row is a tuple subclass; nested Rows (struct cells
                 # as tuples) make pa raise -> fallback
                 pylist.append(dict(zip(names, r)))
@@ -245,34 +223,3 @@ def lit_frame(spark: SparkSession, data, schema):
     slices = max(1, -(-len(rows) // 50_000))
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, slices), schema)
-
-
-def pin_width(spark: SparkSession) -> int | None:
-    """Width for EXPLICIT repartitions that keep CPU-heavy, low-byte
-    stages at session parallelism — AQE's size-based coalescing sees
-    a few MB of sorted-adjacency/shingle arrays and folds the stage
-    to a handful of tasks, idling the rest of the box (triangle_count
-    measured 5.26 s -> 3.45 s at sf0.1 with the pin; the minhash
-    verify stages are the same class). Returns ``None`` when pinning
-    is disabled.
-
-    Tunable via ``SPARK_GRAFT_WIDTH_PIN`` (``0`` disables the pins,
-    ``N`` pins that width) so deployments can A/B it — the ADVICE r13
-    ask. Distinct from SPARK_GRAFT_KERNEL_FANOUT because the two
-    mechanisms bound different costs: fan-out's knee caps per-stage
-    task overhead on RE-EXECUTED kernel subtrees, while pins apply to
-    terminal CPU-bound stages that run once and want every core.
-    """
-    raw = os.environ.get("SPARK_GRAFT_WIDTH_PIN", "")
-    if raw:
-        try:
-            v = int(raw.strip())
-            if v < 0:
-                raise ValueError(raw)
-            return None if v == 0 else v
-        except ValueError:
-            _warn_once(f"pin:{raw}",
-                       "ignoring malformed SPARK_GRAFT_WIDTH_PIN=%r "
-                       "(expected an int >= 0); pinning to session "
-                       "parallelism", raw)
-    return spark.sparkContext.defaultParallelism

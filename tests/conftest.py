@@ -45,16 +45,17 @@ def spark():
     # <100-row fixtures (measured: collect() 208 ms -> 4 ms). The
     # conversion is value-exact for the safe type set and FALLS BACK
     # to the original path for everything else (timestamps, Decimals,
-    # nested Rows, RDD/pandas inputs, kwargs like verifySchema), so
-    # test semantics are unchanged — only the construction path is.
+    # nested Rows, wrong-arity rows, RDD/pandas inputs, extra
+    # arguments like samplingRatio/verifySchema), so test semantics
+    # are unchanged — only the construction path is.
     from blackroad_data_pipeline_spark.operators.parallel import (
         arrow_local_frame,
     )
 
     orig_create = s.createDataFrame
 
-    def fast_create(data, schema=None, **kwargs):
-        if not kwargs and isinstance(data, list) and data:
+    def fast_create(data, schema=None, *args, **kwargs):
+        if not args and not kwargs and isinstance(data, list) and data:
             struct = schema
             if schema is None or (isinstance(schema, (list, tuple))
                                   and all(isinstance(n, str) for n in schema)):
@@ -67,7 +68,7 @@ def spark():
                 df = arrow_local_frame(s, data, struct)
                 if df is not None:
                     return df
-        return orig_create(data, schema, **kwargs)
+        return orig_create(data, schema, *args, **kwargs)
 
     s.createDataFrame = fast_create
     yield s

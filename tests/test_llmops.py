@@ -8,6 +8,7 @@ import pytest
 import blackroad_data_pipeline_spark.llmops  # noqa: F401  (registers ops)
 from pyspark.sql import functions as F
 from blackroad_data_pipeline_spark.operators import apply_operator as op
+from blackroad_data_pipeline_spark.operators import parallel
 
 
 @pytest.fixture()
@@ -113,11 +114,11 @@ def test_winnow_position_shift_invariance(spark):
 
 
 def test_winnow_validation_and_plan(spark, monkeypatch):
-    # knob-off: the shuffle budgets below pin the AT-SCALE plan shape,
-    # where fan_out is a structural no-op (inputs already wide). The
-    # LocalRelation fixture is 1 partition, so without the knob
-    # fan_out legitimately adds its widening exchange.
-    monkeypatch.setenv("SPARK_GRAFT_KERNEL_FANOUT", "0")
+    # target width 1: the shuffle budgets below pin the AT-SCALE plan
+    # shape, where fan_out is a structural no-op (inputs already wide).
+    # The LocalRelation fixture is 1 partition, so by default fan_out
+    # legitimately adds its widening exchange.
+    monkeypatch.setattr(parallel, "_target_width", lambda df: 1)
     df = spark.createDataFrame([(1, "hello world")],
                                "doc_id long, text string")
     with pytest.raises(ValueError, match="k and window"):

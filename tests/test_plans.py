@@ -11,6 +11,7 @@ import pytest
 
 from blackroad_data_pipeline_spark import plans
 from blackroad_data_pipeline_spark.operators import apply_operator as op
+from blackroad_data_pipeline_spark.operators import parallel
 
 SF = "/root/testdata/sf0.001"
 
@@ -22,9 +23,10 @@ def _no_kernel_fanout(monkeypatch):
     the input has fewer partitions than the session has cores — true
     for the single-row-group local fixtures, never for a real at-scale
     table — so the production plan these gates protect is the
-    no-fanout plan. Disable the knob per test (monkeypatch restores
-    it, so runtime-behavior tests elsewhere still exercise fan-out)."""
-    monkeypatch.setenv("SPARK_GRAFT_KERNEL_FANOUT", "0")
+    no-fanout plan. A target width of 1 gives that plan (monkeypatch
+    restores it, so runtime-behavior tests elsewhere still exercise
+    fan-out)."""
+    monkeypatch.setattr(parallel, "_target_width", lambda df: 1)
 
 
 @pytest.fixture(scope="module")

@@ -2,9 +2,6 @@
 plans/<tag>/<query>_<suffix>.txt (round-13 optimization evidence).
 
 Usage: python tools/capture_plans.py <tag> <suffix> q1 q2 ...
-Set SPARK_GRAFT_KERNEL_FANOUT=0 first to capture the pre-fanout
-("before") plan — the knob-off code path is byte-identical to the
-pre-round-13 operators.
 """
 
 from __future__ import annotations

@@ -18,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
 from blackroad_data_pipeline_spark import plans
+from blackroad_data_pipeline_spark.operators import parallel
 from blackroad_data_pipeline_spark.session import get_spark
 
 
@@ -28,9 +29,9 @@ def main() -> int:
     # partitions than the session has cores — always true at sf0.001,
     # never for a real at-scale table — so the 100 TB-relevant shuffle
     # counts are the no-fanout ones (tests/test_plans.py gates the
-    # same shape; the fan-out's local speedup is measured in bench.py,
-    # which runs with the knob live).
-    os.environ.setdefault("SPARK_GRAFT_KERNEL_FANOUT", "0")
+    # same shape; the fan-out's local speedup is measured in bench.py).
+    # A target width of 1 makes fan_out the at-scale no-op.
+    parallel._target_width = lambda df: 1
     spark = get_spark("plan_report")
     # Report plans with AQE OFF: the AdaptiveSparkPlan explain repeats
     # each shared Exchange per consuming branch (the ReuseExchange
